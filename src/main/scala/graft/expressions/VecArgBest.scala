@@ -50,7 +50,9 @@ object VecArgBest {
     * [[Round12Long]] guard: `Math.rint(y·10⁶)/10⁶` when y·10⁶ is provably
     * away from a half and under 2·10¹² — both paths then pick the same
     * integer m, and m/10⁶ (correctly-rounded double division by the exact
-    * 10⁶) equals the decimal m·10⁻⁶'s nearest double.
+    * 10⁶) equals the decimal m·10⁻⁶'s nearest double. A zero result is
+    * +0.0 on both paths: BigDecimal has no signed zero, while `rint` of a
+    * tiny negative is -0.0, which `+ 0.0` turns into +0.0.
     */
   def round6(y: Double): Double = {
     if (java.lang.Double.isNaN(y) || java.lang.Double.isInfinite(y)) return y
@@ -59,7 +61,7 @@ object VecArgBest {
     if (!(Math.abs(f) < 2.0e12) || Math.abs(f - fl - 0.5) < 1.0e-3)
       java.math.BigDecimal.valueOf(y)
         .setScale(6, java.math.RoundingMode.HALF_UP).doubleValue()
-    else Math.rint(f) / 1.0e6
+    else Math.rint(f) / 1.0e6 + 0.0
   }
 
   /** [[FloatVecDot]]'s fold, verbatim; null (boxed) on length mismatch or

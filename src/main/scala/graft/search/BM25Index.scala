@@ -1,7 +1,7 @@
 package graft.search
 
 import graft.util.CacheLedger.CacheOps
-import graft.util.{Stamp, StoreLock, Tables}
+import graft.util.{BucketedParquet, Stamp, StoreLock, Tables}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{LongType, StringType, StructField, StructType}
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
@@ -20,8 +20,16 @@ import java.nio.file.{Files, Paths}
   *   params.txt             termBuckets=<B>  (persisted at build — index identity)
   *   postings/tb=<0..B-1>/  (doc, term, tf, positions, len)  sorted by (term, doc)
   *   termstats/tb=<0..B-1>/ (term, df)                       sorted by term
-  *   corpus/                (n, avglen)                      one row
+  *   corpus/                (n, avglen, total_len)           one row
+  *   {postings,termstats,corpus}/_schema.json   each relation's row schema
   * }}}
+  *
+  * The per-relation `_schema.json` is what makes a served query's
+  * construction job-free: every read goes through the persisted schema
+  * (no footer-reading inference job), and a term-pruned read lists only
+  * the query terms' `tb=` dirs ([[graft.util.BucketedParquet]]). An
+  * index without the files fails loudly and is rebuilt; there is no
+  * inferring fallback.
   *
   * `positions` is the sorted token-ordinal list of the term within the doc
   * (Lucene's positional postings) — what serves quoted-phrase queries
@@ -133,22 +141,50 @@ object BM25Index {
         // never sees postings without the modulus that routes them
         graft.similarity.AnnMeta.write(dest, "termBuckets" -> buckets)
         val lens = post.groupBy(col("doc")).agg(sum(col("tf")).as("len"))
-        post.join(lens, "doc")
-          .withColumn("tb", termBucketCol(col("term"), buckets))
-          .repartition(col("tb"))
-          .sortWithinPartitions(col("term"), col("doc"))
-          .write.mode("overwrite").partitionBy("tb").parquet(s"$dest/postings")
-        tstats
-          .withColumn("tb", termBucketCol(col("term"), buckets))
-          .repartition(col("tb"))
-          .sortWithinPartitions(col("term"))
-          .write.mode("overwrite").partitionBy("tb").parquet(s"$dest/termstats")
-        lens.agg(count(lit(1)).cast("double").as("n"),
+        writeRelations(post.join(lens, "doc"), tstats,
+          lens.agg(count(lit(1)).cast("double").as("n"),
             (sum(col("len")) / count(lit(1)).cast("double")).as("avglen"),
-            sum(col("len")).cast("long").as("total_len"))
-          .coalesce(1).write.mode("overwrite").parquet(s"$dest/corpus")
+            sum(col("len")).cast("long").as("total_len")),
+          buckets, dest)
       } finally tstats.unpersist()
     } finally post.unpersist()
+  }
+
+  /** The three relation writes [[build]] and [[compact]] share: postings
+    * and termstats bucketed by `tb` and term-sorted within, corpus as one
+    * file. Each relation's `_schema.json` is the written frame's own
+    * schema, so recording it costs no job; readers then need neither a
+    * schema-inference job nor a listing of every bucket.
+    */
+  private def writeRelations(postings: DataFrame, tstats: DataFrame,
+                             corpus: DataFrame, buckets: Int,
+                             root: String): Unit = {
+    def write(rows: DataFrame, rel: String, bucketed: Boolean): Unit = {
+      val w = rows.write.mode("overwrite")
+      (if (bucketed) w.partitionBy("tb") else w).parquet(s"$root/$rel")
+      BucketedParquet.writeSchema(s"$root/$rel", rows.schema)
+    }
+    def byBucket(rows: DataFrame, sortCols: Column*): DataFrame =
+      rows.withColumn("tb", termBucketCol(col("term"), buckets))
+        .repartition(col("tb"))
+        .sortWithinPartitions(sortCols: _*)
+    write(byBucket(postings, col("term"), col("doc")), "postings", bucketed = true)
+    write(byBucket(tstats, col("term")), "termstats", bucketed = true)
+    write(corpus.coalesce(1), "corpus", bucketed = false)
+  }
+
+  /** The query terms' slice of a bucketed relation of one part: only the
+    * terms' `tb=` dirs are listed, each part routed by its own persisted
+    * modulus (a segment's derived count legitimately differs from the
+    * base's). The `tb` and term filters keep the plan's PartitionFilters
+    * and PushedFilters; a part holding none of the buckets reads as a
+    * typed empty frame.
+    */
+  private def termSlice(spark: SparkSession, part: String, rel: String,
+                        terms: Seq[String]): DataFrame = {
+    val tbs = terms.map(termBucket(_, termBuckets(part))).distinct
+    BucketedParquet.readParts(spark, s"$part/$rel", "tb", tbs)
+      .filter(col("tb").isin(tbs: _*) && col("term").isin(terms: _*))
   }
 
   /** Incremental maintenance, Lucene-segment style: NEW documents are
@@ -268,15 +304,13 @@ object BM25Index {
     */
   private def livePostings(spark: SparkSession, dest: String,
                            parts: Seq[String],
-                           prune: (String, DataFrame) => DataFrame): DataFrame = {
+                           read: String => DataFrame): DataFrame = {
     latestTombstones(spark, dest) match {
       case None =>
-        parts.map(p => prune(p, spark.read.parquet(s"$p/postings")))
-          .reduce(_.unionAll(_))
+        parts.map(read).reduce(_.unionAll(_))
       case Some(tomb) =>
         val tagged = parts.map(p =>
-            prune(p, spark.read.parquet(s"$p/postings"))
-              .withColumn("__part", lit(partTag(dest, p))))
+            read(p).withColumn("__part", lit(partTag(dest, p))))
           .reduce(_.unionAll(_))
         tagged.join(broadcast(tomb),
             tagged("doc").cast("string") === tomb("__id") &&
@@ -302,7 +336,8 @@ object BM25Index {
     val parts = partDirs(dest)
     val purging = Files.isDirectory(Paths.get(dest, "_tombstones"))
     if (parts.size > 1 || purging) {
-      val post = livePostings(spark, dest, parts, (_, df) => df)
+      val post = livePostings(spark, dest, parts,
+        p => BucketedParquet.readAll(spark, s"$p/postings"))
         .drop("tb").persistBounded()
       // corpus stats recomputed from the SURVIVING per-(doc, term) ground
       // truth — on a tombstone-free index this equals the per-part
@@ -321,20 +356,11 @@ object BM25Index {
         // their directories)
         val tstats = post.groupBy(col("term"))
           .agg(count(lit(1)).cast("double").as("df")).persistBounded()
-        val buckets = autoTermBuckets(tstats.count())
-        graft.similarity.AnnMeta.write(tmp, "termBuckets" -> buckets)
-        post
-          .withColumn("tb", termBucketCol(col("term"), buckets))
-          .repartition(col("tb"))
-          .sortWithinPartitions(col("term"), col("doc"))
-          .write.mode("overwrite").partitionBy("tb").parquet(s"$tmp/postings")
-        tstats
-          .withColumn("tb", termBucketCol(col("term"), buckets))
-          .repartition(col("tb"))
-          .sortWithinPartitions(col("term"))
-          .write.mode("overwrite").partitionBy("tb").parquet(s"$tmp/termstats")
-        tstats.unpersist()
-        corpus.coalesce(1).write.mode("overwrite").parquet(s"$tmp/corpus")
+        try {
+          val buckets = autoTermBuckets(tstats.count())
+          graft.similarity.AnnMeta.write(tmp, "termBuckets" -> buckets)
+          writeRelations(post, tstats, corpus, buckets, tmp)
+        } finally tstats.unpersist()
         // swap with the isBuilt sentinel (corpus/_SUCCESS) handled FIRST on
         // delete and LAST on move: a crash anywhere mid-swap leaves the
         // index without its sentinel, so build-if-absent callers rebuild
@@ -383,20 +409,14 @@ object BM25Index {
     val terms = BM25.analyze(queryTerms)
     require(terms.nonEmpty, "no query terms survive analysis")
     val parts = partDirs(dest)
-    // per-PART bucket literals: each part routes by its own persisted
-    // modulus (a segment's derived count legitimately differs from the
-    // base's — one global tbs list would mis-prune)
-    val tbsOf = parts.map(p => p ->
-      terms.map(termBucket(_, termBuckets(p))).distinct).toMap
-    val post = livePostings(spark, dest, parts, (p, df) =>
-      df.filter(col("tb").isin(tbsOf(p): _*) && col("term").isin(terms: _*)))
+    val post = livePostings(spark, dest, parts,
+      termSlice(spark, _, "postings", terms))
     val tstats = parts
-      .map(p => spark.read.parquet(s"$p/termstats")
-        .filter(col("tb").isin(tbsOf(p): _*) && col("term").isin(terms: _*)))
+      .map(termSlice(spark, _, "termstats", terms))
       .reduce(_.unionAll(_))
       .groupBy(col("term")).agg(sum(col("df")).as("df"))
     val corpus = parts
-      .map(p => spark.read.parquet(s"$p/corpus"))
+      .map(p => BucketedParquet.readAll(spark, s"$p/corpus"))
       .reduce(_.unionAll(_))
       .agg(sum(col("n")).as("n"),
         (sum(col("total_len")).cast("double") / sum(col("n"))).as("avglen"))
@@ -417,10 +437,10 @@ object BM25Index {
     * `GRAFT_INDEX_DIR` when set — never a hardcoded absolute path.
     */
   def defaultDir(sfDir: String): String = {
-    // v4: termBuckets persisted per part (the v3 layout routed by a
-    // compile-time constant; the bump orphans it so stamped stores can
-    // never be probed under a modulus they weren't built with)
-    graft.util.StoreDirs.resolve("bm25-index-v4", sfDir)
+    // v5: every relation carries its `_schema.json` (a v4 index has
+    // none and would fail every read; the bump orphans it so stamped
+    // stores rebuild). v4 persisted termBuckets per part.
+    graft.util.StoreDirs.resolve("bm25-index-v5", sfDir)
   }
 
   /** Build-if-absent-or-stale for a testdata documents corpus; returns the
@@ -500,11 +520,8 @@ object BM25Index {
       .filter(_.nonEmpty)
     require(ordered.nonEmpty, "no phrase terms survive analysis")
     val terms = ordered.distinct
-    val parts = partDirs(dest)
-    val tbsOf = parts.map(p => p ->
-      terms.map(termBucket(_, termBuckets(p))).distinct).toMap
-    val post = livePostings(spark, dest, parts, (p, df) =>
-      df.filter(col("tb").isin(tbsOf(p): _*) && col("term").isin(terms: _*)))
+    val post = livePostings(spark, dest, partDirs(dest),
+      termSlice(spark, _, "postings", terms))
     val slot = terms.zipWithIndex.toMap
     val joined = terms.zipWithIndex.map { case (t, i) =>
         val keep = Seq(col("doc")) ++ (if (i == 0) Seq(col("len")) else Nil) ++
@@ -539,8 +556,7 @@ object BM25Index {
     */
   def suggest(spark: SparkSession, dest: String, prefix: String,
               k: Int): DataFrame = {
-    val parts = partDirs(dest)
-    parts.map(p => spark.read.parquet(s"$p/termstats"))
+    partDirs(dest).map(p => BucketedParquet.readAll(spark, s"$p/termstats"))
       .reduce(_.unionAll(_))
       .filter(col("term").startsWith(prefix.toLowerCase))
       .groupBy(col("term"))
@@ -566,10 +582,10 @@ object BM25Index {
   def moreLikeThis(spark: SparkSession, dest: String, seedId: Long,
                    nTerms: Int, k: Int, minDf: Double = 1.0): DataFrame = {
     require(nTerms > 0 && k > 0, "nTerms and k must be positive")
-    val post = spark.read.parquet(s"$dest/postings")
-    val tstats = spark.read.parquet(s"$dest/termstats")
+    val post = BucketedParquet.readAll(spark, s"$dest/postings")
+    val tstats = BucketedParquet.readAll(spark, s"$dest/termstats")
       .select(col("term"), col("df"))
-    val corpus = spark.read.parquet(s"$dest/corpus")
+    val corpus = BucketedParquet.readAll(spark, s"$dest/corpus")
     val seedTf = post.filter(col("doc") === seedId).select(col("term"), col("tf"))
     val seedTerms = tstats.join(broadcast(seedTf), "term")
       .filter(col("df") >= minDf)
@@ -594,12 +610,9 @@ object BM25Index {
            k: Int): DataFrame = {
     val terms = BM25.analyze(queryTerms)
     require(terms.nonEmpty, "no query terms survive analysis")
-    val tbs = terms.map(termBucket(_, termBuckets(dest))).distinct
-    val post = spark.read.parquet(s"$dest/postings")
-      .filter(col("tb").isin(tbs: _*) && col("term").isin(terms: _*))
-    val tstats = spark.read.parquet(s"$dest/termstats")
-      .filter(col("tb").isin(tbs: _*) && col("term").isin(terms: _*))
-    val corpus = spark.read.parquet(s"$dest/corpus")
+    val post = termSlice(spark, dest, "postings", terms)
+    val tstats = termSlice(spark, dest, "termstats", terms)
+    val corpus = BucketedParquet.readAll(spark, s"$dest/corpus")
     post.join(broadcast(tstats.select(col("term"), col("df"))), "term")
       .crossJoin(broadcast(corpus))
       .groupBy(col("doc"))

@@ -153,8 +153,11 @@ object Collections {
     * subtree reads ONLY the term-bucket-pruned postings/termstats parquet
     * (no Generate/explode anywhere — spec-asserted), and the corpus join
     * happens AFTER the k-row cut, so per-request cost is the k lookups,
-    * never a corpus scan. Envelopes are byte-identical to the ad-hoc path
-    * (the index scoring is value-equal by the served-query oracle).
+    * never a corpus scan. Building the frame runs no Spark job: the index
+    * reads go through each relation's persisted schema and list only the
+    * query terms' bucket dirs (HttpServingSpec counts the jobs).
+    * Envelopes are byte-identical to the ad-hoc path (the index scoring
+    * is value-equal by the served-query oracle).
     *
     * Scores through [[BM25Index.topKMerged]], so documents indexed as
     * appended segments by the live-ingest loop are visible immediately —

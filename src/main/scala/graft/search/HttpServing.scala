@@ -2,11 +2,13 @@ package graft.search
 
 import java.net.{InetSocketAddress, URLDecoder}
 import java.nio.charset.StandardCharsets.UTF_8
-import java.util.concurrent.Executors
+import java.util.concurrent.atomic.AtomicInteger
+import java.util.concurrent.{ExecutorService, Executors, TimeUnit}
 
 import scala.util.control.NonFatal
 
 import com.sun.net.httpserver.{HttpExchange, HttpHandler, HttpServer}
+import org.apache.logging.log4j.LogManager
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
@@ -31,18 +33,32 @@ import org.apache.spark.sql.functions._
   * `bm25IndexDir` to [[referenceRoutes]]: the keyword route then reads
   * the prebuilt [[BM25Index]] postings store (the `q_keyword_bm25_served`
   * path) instead of scoring ad hoc — no tokenize scan in the request
-  * plan, byte-identical envelopes (both spec-asserted).
+  * plan, byte-identical envelopes (both spec-asserted). With both index
+  * dirs set, building a request's plan costs no store metadata scan
+  * either: every store read goes through its persisted `_schema.json` and
+  * lists only the probed key's (or query terms') bucket dirs, so
+  * `/query` and `/hashtag` run no Spark job before their action and
+  * `/user` runs one (the screen-name lookup). HttpServingSpec counts the
+  * jobs and their tasks.
   */
 object HttpServing {
 
   private val ErrorJson = """{"status_code":500,"message":"Internal Server Error"}"""
 
+  private val log = LogManager.getLogger("graft.search.HttpServing")
+
+  val QueryPath = "/api/search/query"
+  val HashtagPath = "/api/search/hashtag"
+  val UserPath = "/api/search/user"
+
   /** A route: decoded query params → the response JSON string. */
   type Route = Map[String, String] => String
 
   /** Start an HTTP server on `port` (0 = any free port; read it back from
-    * `server.getAddress.getPort`). Each route's body runs on a worker
-    * thread; exceptions become the reference's error envelope.
+    * `server.getAddress.getPort`). Each route's body runs on one of 4
+    * daemon worker threads; an exception becomes the reference's error
+    * envelope and one logged line (route, exception class, message).
+    * Stop it with [[stop]], which also ends the worker pool.
     */
   def start(port: Int, routes: Map[String, Route]): HttpServer = {
     val server = HttpServer.create(new InetSocketAddress(port), 0)
@@ -51,7 +67,11 @@ object HttpServing {
         override def handle(ex: HttpExchange): Unit = {
           val body =
             try route(parseQuery(ex.getRequestURI.getRawQuery))
-            catch { case NonFatal(_) => ErrorJson }
+            catch {
+              case NonFatal(e) =>
+                log.error(s"route $path failed: ${e.getClass.getName}: ${e.getMessage}")
+                ErrorJson
+            }
           val bytes = body.getBytes(UTF_8)
           ex.getResponseHeaders.add("Content-Type", "application/json")
           // reference: @CrossOrigin("*") — the Angular UI is a separate origin
@@ -62,13 +82,38 @@ object HttpServing {
         }
       })
     }
-    server.setExecutor(Executors.newFixedThreadPool(4))
+    val prefix = workerPrefix(server.getAddress.getPort)
+    val n = new AtomicInteger
+    server.setExecutor(Executors.newFixedThreadPool(4, { (r: Runnable) =>
+      val t = new Thread(r, prefix + n.incrementAndGet())
+      t.setDaemon(true)
+      t
+    }))
     server.start()
     server
   }
 
+  /** Stop `server` and end its worker pool: `HttpServer.stop` alone
+    * leaves the pool's threads parked for the life of the JVM.
+    */
+  def stop(server: HttpServer): Unit = {
+    server.stop(0)
+    server.getExecutor match {
+      case pool: ExecutorService =>
+        pool.shutdownNow()
+        pool.awaitTermination(10, TimeUnit.SECONDS)
+      case _ => ()
+    }
+  }
+
+  /** Name prefix of the worker threads of the server on `port`. */
+  private[search] def workerPrefix(port: Int): String =
+    s"graft-http-$port-worker-"
+
   /** The reference's three endpoints over a (tweets, users) collection
-    * pair, wired to [[Collections]] queries and [[Serving]] envelopes.
+    * pair, wired to [[Collections]] queries and [[Serving]] envelopes:
+    * each route builds its response frame ([[responseFrames]]) and runs
+    * one action on it.
     *
     * `bm25IndexDir`: when set, the keyword route scores from that prebuilt
     * [[BM25Index]] postings store ([[Collections.keywordSearchIndexed]])
@@ -87,12 +132,31 @@ object HttpServing {
     */
   def referenceRoutes(tweets: DataFrame, users: DataFrame,
                       bm25IndexDir: Option[String] = None,
-                      tweetIndexDir: Option[String] = None): Map[String, Route] = Map(
+                      tweetIndexDir: Option[String] = None): Map[String, Route] = {
+    val frames = responseFrames(tweets, users, bm25IndexDir, tweetIndexDir)
+    def route(path: String)(answer: DataFrame => Option[String]): (String, Route) =
+      path -> (params => frames(path)(params).flatMap(answer).getOrElse(ErrorJson))
+    Map(
+      route(QueryPath)(df => Some(df.head().getString(0))),
+      route(HashtagPath)(df => Some(df.head().getString(0))),
+      // unknown user → empty result set → reference returns the error
+      // envelope (its user lookup throws on no results)
+      route(UserPath)(df => df.collect().headOption.map(_.getString(0))))
+  }
+
+  /** Each route's one-row response frame, built but not yet run; `None`
+    * answers the error envelope. With both index dirs set, building the
+    * `/query` and `/hashtag` frames runs no Spark job, and `/user` runs
+    * exactly one, the screen-name collect (HttpServingSpec counts them).
+    */
+  private[search] def responseFrames(
+      tweets: DataFrame, users: DataFrame, bm25IndexDir: Option[String],
+      tweetIndexDir: Option[String]): Map[String, Map[String, String] => Option[DataFrame]] = Map(
     // Handler.java:33-74 — free-text query, BM25 top-10, best first
-    "/api/search/query" -> { params =>
+    QueryPath -> { params =>
       val terms = params.getOrElse("query", "")
         .toLowerCase.split("\\s+").filter(_.nonEmpty).toSeq
-      if (terms.isEmpty) ErrorJson
+      if (terms.isEmpty) None
       else {
         val results = bm25IndexDir match {
           case Some(dir) =>
@@ -100,71 +164,60 @@ object HttpServing {
           case None =>
             Collections.keywordSearch(tweets, users, terms, k = 10)
         }
-        Serving.searchResponse(results, negate(col("score")),
+        Some(Serving.searchResponse(results, negate(col("score")),
           userCols = Seq("userName", "userScreenName"),
-          tweetCols = Seq("tweet_id", "tweetText", "score"))
-          .head().getString(0)
+          tweetCols = Seq("tweet_id", "tweetText", "score")))
       }
     },
     // Handler.java:76-117 — hashtag exact match, id order, cap 1000
-    "/api/search/hashtag" -> { params =>
-      params.get("tag").filter(_.nonEmpty) match {
-        case None => ErrorJson
-        case Some(tag) =>
-          val matches = tweetIndexDir match {
-            case Some(dir) =>
-              // bucket-pruned posting probe — the request plan reads one
-              // __bucket directory of the hashtag store, never the corpus
-              ServingStores.postingProbe(tweets.sparkSession,
-                  dir + "/hashtags", tag)
-                .orderBy(col("id").cast("long").asc)
-                .limit(1000)
-            case None => Collections.hashtagSearch(tweets, tag)
-          }
-          val results = matches
-            .join(users.withColumnRenamed("id", "uid"),
-              col("userID") === col("uid"), "left")
-          Serving.searchResponse(results, col("id").cast("long"),
-            userCols = Seq("userName", "userScreenName"),
-            tweetCols = Seq("id", "tweetText"))
-            .head().getString(0)
+    HashtagPath -> { params =>
+      params.get("tag").filter(_.nonEmpty).map { tag =>
+        val matches = tweetIndexDir match {
+          case Some(dir) =>
+            // bucket-pruned posting probe — the request plan reads one
+            // __bucket directory of the hashtag store, never the corpus
+            ServingStores.postingProbe(tweets.sparkSession,
+                dir + "/hashtags", tag)
+              .orderBy(col("id").cast("long").asc)
+              .limit(1000)
+          case None => Collections.hashtagSearch(tweets, tag)
+        }
+        val results = matches
+          .join(users.withColumnRenamed("id", "uid"),
+            col("userID") === col("uid"), "left")
+        Serving.searchResponse(results, col("id").cast("long"),
+          userCols = Seq("userName", "userScreenName"),
+          tweetCols = Seq("id", "tweetText"))
       }
     },
     // Handler.java:119-161 — resolve user (`SolrRanker.java:131`:
     // userName:<id>), then newest-first timeline, cap 1000
-    "/api/search/user" -> { params =>
-      params.get("id").filter(_.nonEmpty) match {
-        case None => ErrorJson
-        case Some(id) =>
-          val results = tweetIndexDir match {
-            case Some(dir) =>
-              // two store reads, like the reference's two Solr queries:
-              // resolve the screen name (users lookup), then ONE userID
-              // bucket of the timeline layout — no corpus join at all
-              val spark = tweets.sparkSession
-              val u = ServingStores.postingProbe(spark, dir + "/users", id)
-                .select(col("id"), col("userScreenName")).collect()
-              if (u.isEmpty) null
-              else ServingStores.timelineProbe(spark, dir + "/by_user",
-                  "userID", u.head.getString(0))
-                .orderBy(col("tweetDateTime").desc,
-                  col("id").cast("long").desc)
-                .limit(1000)
-                .select(lit(u.head.getString(1)).as("userScreenName"),
-                  col("id").as("tweet_id"), col("tweetDateTime"),
-                  col("tweetText"))
-            case None => Collections.userTimeline(tweets, users, id)
-          }
-          val rows =
-            if (results == null) Array.empty[org.apache.spark.sql.Row]
-            else Serving.timelineResponse(results,
-              negate(col("tweet_id").cast("long")),
-              userCols = Seq("userScreenName"),
-              tweetCols = Seq("tweet_id", "tweetText", "tweetDateTime"))
-              .collect()
-          // unknown user → empty result set → reference returns the
-          // error envelope (its user lookup throws on no results)
-          if (rows.isEmpty) ErrorJson else rows.head.getString(0)
+    UserPath -> { params =>
+      params.get("id").filter(_.nonEmpty).flatMap { id =>
+        val results = tweetIndexDir match {
+          case Some(dir) =>
+            // two store reads, like the reference's two Solr queries:
+            // resolve the screen name (users lookup), then ONE userID
+            // bucket of the timeline layout — no corpus join at all
+            val spark = tweets.sparkSession
+            ServingStores.postingProbe(spark, dir + "/users", id)
+              .select(col("id"), col("userScreenName")).collect()
+              .headOption.map { u =>
+                ServingStores.timelineProbe(spark, dir + "/by_user",
+                    "userID", u.getString(0))
+                  .orderBy(col("tweetDateTime").desc,
+                    col("id").cast("long").desc)
+                  .limit(1000)
+                  .select(lit(u.getString(1)).as("userScreenName"),
+                    col("id").as("tweet_id"), col("tweetDateTime"),
+                    col("tweetText"))
+              }
+          case None => Some(Collections.userTimeline(tweets, users, id))
+        }
+        results.map(Serving.timelineResponse(_,
+          negate(col("tweet_id").cast("long")),
+          userCols = Seq("userScreenName"),
+          tweetCols = Seq("tweet_id", "tweetText", "tweetDateTime")))
       }
     })
 

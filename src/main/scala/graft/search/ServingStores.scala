@@ -4,8 +4,10 @@ import java.nio.file.{Files, Path, Paths}
 
 import scala.jdk.CollectionConverters._
 
-import graft.util.{StoreFs, StoreLock}
+import graft.util.{BucketedParquet, StoreFs, StoreLock}
+import org.apache.spark.sql.catalyst.expressions.{Cast, Literal, Murmur3HashFunction}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.internal.SQLConf
 import org.apache.spark.sql.types.{LongType, StringType, StructField, StructType}
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 
@@ -35,6 +37,15 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
   * (`_schema.json`), so a store built from an all-empty-keys source
   * (zero parquet files) still probes to a typed empty frame instead of
   * a schema-inference error.
+  *
+  * A probe computes its key's bucket on the driver ([[keyBucket]], the
+  * same Murmur3 as the build's `hash`) and reads only that bucket's dir
+  * through the persisted schema, so building the probe's plan runs no
+  * Spark job: no schema inference, and no listing of the store's other
+  * bucket dirs (64 by default — past Spark's threshold of 32, listing
+  * them all is a job with a task per dir). A key whose bucket has no dir
+  * probes to a typed empty frame. A store without `_schema.json` fails
+  * loudly and is rebuilt.
   *
   * Maintenance lifecycle (the reference's indexer is a CONTINUOUS
   * keyed-upsert loop — SolrIndexer's addBean+commit per batch — with
@@ -272,10 +283,9 @@ object ServingStores {
     * a broadcast tombstone anti-join when the store has live deletes).
     */
   def postingProbe(spark: SparkSession, dest: String, key: String): DataFrame = {
-    val buckets = readBuckets(dest)
-    val rows = readStore(spark, dest)
-      .filter(col("__bucket") === bucketOf(lit(key), buckets) &&
-        col("__key") === key)
+    val b = keyBucket(key, readBuckets(dest))
+    val rows = BucketedParquet.readParts(spark, dest, "__bucket", Seq(b))
+      .filter(col("__bucket") === b && col("__key") === key)
     dropDead(spark, dest, rows).drop("__key", "__bucket", "__gen")
   }
 
@@ -357,14 +367,17 @@ object ServingStores {
   def timelineProbeMany(spark: SparkSession, dest: String, fkCol: String,
                         values: Seq[Any]): DataFrame = {
     if (values.isEmpty)
-      readStore(spark, dest).filter(lit(false)).drop("__bucket", "__gen")
+      BucketedParquet.readParts(spark, dest, "__bucket", Nil)
+        .drop("__bucket", "__gen")
     else {
       val buckets = readBuckets(dest)
-      val pred = values
-        .map(v => col("__bucket") === bucketOf(lit(v), buckets) &&
-          col(fkCol) === lit(v))
+      val keyed = values.map(v => v -> keyBucket(v, buckets))
+      val pred = keyed
+        .map { case (v, b) => col("__bucket") === b && col(fkCol) === lit(v) }
         .reduce(_ || _)
-      dropDead(spark, dest, readStore(spark, dest).filter(pred))
+      dropDead(spark, dest,
+          BucketedParquet.readParts(spark, dest, "__bucket", keyed.map(_._2))
+            .filter(pred))
         .drop("__bucket", "__gen")
     }
   }
@@ -577,7 +590,7 @@ object ServingStores {
                            newBuckets: Int, sortCols: Seq[Column],
                            reBucket: Column): Unit =
     StoreLock.withLock(dest, "rebucket") {
-      val rows = dropDead(spark, dest, readStore(spark, dest))
+      val rows = dropDead(spark, dest, BucketedParquet.readAll(spark, dest))
         .drop("__bucket")
         .withColumn("__bucket", bucketOf(reBucket, newBuckets))
       val stampFile = Paths.get(dest, "source_stamp.txt")
@@ -637,8 +650,7 @@ object ServingStores {
       val tombSnap = tombstoneFiles(dest)
       val hot = (0 until buckets).filter(b => snap(b).size >= minFiles)
       if (hot.nonEmpty) {
-        val rowSchema = readSchema(dest).getOrElse(
-          spark.read.parquet(dest).schema)
+        val rowSchema = BucketedParquet.schema(dest)
         val fileSchema = StructType(rowSchema.filterNot(_.name == "__bucket"))
         val tmpRoot = dest.stripSuffix("/") + "-rewrite-tmp"
         deleteRecursively(Paths.get(tmpRoot))
@@ -747,37 +759,28 @@ object ServingStores {
       case _ => ()
     }
 
-  /** Read the store's rows (including `__bucket`) through the persisted
-    * schema, so an all-empty store (zero parquet files) yields a typed
-    * empty frame instead of an inference error. Legacy stores without
-    * `_schema.json` fall back to inference.
+  /** The driver-side twin of [[bucketOf]]: Spark's own string cast of
+    * the key, then Murmur3 (seed 42, `hash`'s) and a non-negative
+    * modulus — so a probe knows its bucket dir before any plan exists.
     */
-  private def readStore(spark: SparkSession, dest: String): DataFrame =
-    readSchema(dest) match {
-      case Some(s) => spark.read.schema(s).parquet(dest)
-      case None => spark.read.parquet(dest)
-    }
+  private[search] def keyBucket(key: Any, buckets: Int): Int = {
+    val s = Cast(Literal(key), StringType,
+      Some(SQLConf.get.sessionLocalTimeZone)).eval()
+    Math.floorMod(
+      Murmur3HashFunction.hash(s, StringType, 42L).toInt, buckets)
+  }
 
   // metadata files ride the StoreFs seam (read-after-write visibility
   // is contract primitive 3) — an object-store binding inherits every
   // _schema/_buckets/_gen/_idcol read-write without a call-site hunt
   private def writeMeta(dest: String, buckets: Int, schema: StructType): Unit = {
-    StoreFs.createDirectories(Paths.get(dest))
-    StoreFs.writeString(Paths.get(dest, "_schema.json"), schema.json)
+    BucketedParquet.writeSchema(dest, schema)
     // _buckets.txt LAST: it is the store's serve sentinel
     StoreFs.writeString(Paths.get(dest, "_buckets.txt"), buckets.toString)
   }
 
   private def readBuckets(dest: String): Int =
     StoreFs.readString(Paths.get(dest, "_buckets.txt")).trim.toInt
-
-  private def readSchema(dest: String): Option[StructType] = {
-    val f = Paths.get(dest, "_schema.json")
-    if (StoreFs.exists(f))
-      Some(org.apache.spark.sql.types.DataType.fromJson(StoreFs.readString(f))
-        .asInstanceOf[StructType])
-    else None
-  }
 
   /** Monotonic per-store generation counter (`_gen.txt`; build = 0).
     * Read-inc-write under the single-writer-per-store contract.
@@ -810,11 +813,6 @@ object ServingStores {
 
   private def readIdCol(dest: String): String =
     StoreFs.readString(Paths.get(dest, "_idcol.txt")).trim
-
-  private def readIdColOpt(dest: String): Option[String] = {
-    val f = Paths.get(dest, "_idcol.txt")
-    if (StoreFs.exists(f)) Some(StoreFs.readString(f).trim) else None
-  }
 
   private def deleteRecursively(p: Path): Unit =
     if (Files.exists(p)) {

@@ -300,7 +300,7 @@ object StoreAdmin {
     // directory that was never ours.
     val legacyRoots = Seq("ivfpq-store-v1", "ivfpq-store-v2",
       "ivfpq-store-v3", "pq-store-v2", "ivf-store-v1", "ivf-store-v2",
-      "sq8-store-v1", "srp-label-v1", "bm25-index-v3")
+      "sq8-store-v1", "srp-label-v1", "bm25-index-v3", "bm25-index-v4")
       .map(v => Paths.get(s"${sys.props("user.dir")}/target/$v"))
     val legacySwept =
       if (sys.env.contains("GRAFT_INDEX_DIR")) Nil

@@ -62,6 +62,22 @@ class VecArgBestSpec extends SparkSpec {
     }
   }
 
+  test("a tiny negative winning cosine rounds to +0.0, as the fold's round does") {
+    GraftFunctions.register(spark)
+    // every sim is -1e-9: round6's rint fast path, whose raw result is -0.0
+    val cents = Seq((0L, Array(1.0, 0.0, 0.0, 0.0)), (1L, Array(0.0, 1.0, 0.0, 0.0)))
+      .toDF("cid", "cv")
+    val r = Seq(Tuple1(Array(-1.0e-9, -1.0e-9, 1.0, 0.0))).toDF("v")
+      .crossJoin(broadcast(cents.agg(centsCol)))
+      .select(expr("graft_cos_best(__cents, v)").as("fast"), foldBest.as("ref"))
+      .head()
+    val bits = (i: Int) => java.lang.Double.doubleToRawLongBits(r.getStruct(i).getDouble(0))
+    assert(bits(0) == bits(1), s"sim bits: $r")
+    assert(bits(0) == java.lang.Double.doubleToRawLongBits(0.0), s"signed zero: $r")
+    assert(r.getStruct(0).getLong(1) == -r.getStruct(1).getLong(1))
+    assert(java.lang.Double.doubleToRawLongBits(VecArgBest.round6(-1.0e-9)) == 0L)
+  }
+
   test("graft_pq_argmin is bit-identical to the array_min fold") {
     GraftFunctions.register(spark)
     val withCents = vecRows.crossJoin(broadcast(centRows.agg(centsCol)))

@@ -2,8 +2,17 @@ package graft.search
 
 import java.net.URI
 import java.net.http.{HttpClient, HttpRequest, HttpResponse}
+import java.util.concurrent.{ConcurrentHashMap, ConcurrentLinkedQueue}
+
+import scala.jdk.CollectionConverters._
 
 import graft.SparkSpec
+import org.apache.logging.log4j.LogManager
+import org.apache.logging.log4j.core.appender.AbstractAppender
+import org.apache.logging.log4j.core.config.Property
+import org.apache.logging.log4j.core.{LogEvent, Logger => CoreLogger}
+import org.apache.spark.ListenerBusDrain
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart, SparkListenerTaskEnd}
 import org.apache.spark.sql.functions._
 
 /** End-to-end HTTP serving: real server on a real port, driven with the
@@ -26,7 +35,7 @@ class HttpServingSpec extends SparkSpec {
   private def withServer(f: Int => Unit): Unit = {
     val server = HttpServing.start(0, HttpServing.referenceRoutes(tweets, users))
     try f(server.getAddress.getPort)
-    finally server.stop(0)
+    finally HttpServing.stop(server)
   }
 
   private val client = HttpClient.newHttpClient()
@@ -78,7 +87,7 @@ class HttpServingSpec extends SparkSpec {
       // first request after the swap: the new generation, same rows
       assert(get(port, "/api/search/hashtag?tag=jobs").body() == before,
         "first request after the swap must serve the full new generation")
-    } finally server.stop(0)
+    } finally HttpServing.stop(server)
   }
 
   test("GET /api/search/query serves the keyword envelope over HTTP") {
@@ -139,7 +148,7 @@ class HttpServingSpec extends SparkSpec {
       assert(a == b, "served envelope must be byte-identical to ad hoc")
       assert(json(b, "$.status_code") == "200")
       assert(json(b, "$.count") == "2")
-    } finally { adhoc.stop(0); served.stop(0) }
+    } finally { HttpServing.stop(adhoc); HttpServing.stop(served) }
   }
 
   test("stored hashtag/user routes: bucket-pruned probe plans, " +
@@ -170,7 +179,7 @@ class HttpServingSpec extends SparkSpec {
         val b = get(served.getAddress.getPort, q).body()
         assert(a == b, s"$q: served envelope differs from ad hoc")
       }
-    } finally { adhoc.stop(0); served.stop(0) }
+    } finally { HttpServing.stop(adhoc); HttpServing.stop(served) }
   }
 
   test("missing params and unknown users return the error envelope, HTTP 200") {
@@ -183,5 +192,118 @@ class HttpServingSpec extends SparkSpec {
       val noUser = get(port, "/api/search/user?id=nobody")
       assert(json(noUser.body(), "$.status_code") == "500")
     }
+  }
+
+  test("stop ends the server's worker pool: no worker thread outlives it") {
+    val server = HttpServing.start(0, HttpServing.referenceRoutes(tweets, users))
+    val prefix = HttpServing.workerPrefix(server.getAddress.getPort)
+    def workers = Thread.getAllStackTraces.keySet.asScala
+      .filter(t => t.getName.startsWith(prefix) && t.isAlive)
+    try {
+      assert(get(server.getAddress.getPort, "/api/search/hashtag?tag=jobs")
+        .statusCode() == 200)
+      assert(workers.nonEmpty, s"no thread named $prefix* served the request")
+      assert(workers.forall(_.isDaemon), "worker threads must not pin the JVM")
+    } finally HttpServing.stop(server)
+    assert(workers.isEmpty, s"worker threads alive after stop: ${workers.map(_.getName)}")
+  }
+
+  test("a route that throws answers the 500 envelope with HTTP 200 and " +
+      "logs the route, exception class and message") {
+    val logged = new ConcurrentLinkedQueue[String]
+    val capture = new AbstractAppender("http-serving-capture", null, null, true,
+        Property.EMPTY_ARRAY) {
+      override def append(e: LogEvent): Unit =
+        logged.add(e.getMessage.getFormattedMessage)
+    }
+    capture.start()
+    val logger = LogManager.getLogger("graft.search.HttpServing").asInstanceOf[CoreLogger]
+    logger.addAppender(capture)
+    val server = HttpServing.start(0, Map[String, HttpServing.Route](
+      "/boom" -> (_ => throw new IllegalStateException("store sentinel missing"))))
+    try {
+      val resp = get(server.getAddress.getPort, "/boom?x=1")
+      assert(resp.statusCode() == 200)
+      assert(resp.body() == """{"status_code":500,"message":"Internal Server Error"}""")
+    } finally {
+      HttpServing.stop(server)
+      logger.removeAppender(capture)
+      capture.stop()
+    }
+    val lines = logged.asScala.toSeq
+    assert(lines.exists(l => l.contains("/boom") &&
+      l.contains("java.lang.IllegalStateException") &&
+      l.contains("store sentinel missing")), s"failure not logged: $lines")
+  }
+
+  /** Jobs run while `body` runs, each with the number of tasks it ran. */
+  private def jobs[A](body: => A): (A, Seq[Int]) = {
+    val sc = spark.sparkContext
+    ListenerBusDrain(sc)
+    val jobOfStage = new ConcurrentHashMap[Int, Int]
+    val tasks = new ConcurrentHashMap[Int, Int]
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit = {
+        tasks.putIfAbsent(e.jobId, 0)
+        e.stageIds.foreach(jobOfStage.put(_, e.jobId))
+      }
+      override def onTaskEnd(e: SparkListenerTaskEnd): Unit =
+        Option(jobOfStage.get(e.stageId)).foreach(j => tasks.merge(j, 1, _ + _))
+    }
+    sc.addSparkListener(listener)
+    try {
+      val r = body
+      ListenerBusDrain(sc)
+      (r, tasks.asScala.toSeq.sortBy(_._1).map(_._2))
+    } finally sc.removeSparkListener(listener)
+  }
+
+  test("indexed routes build their plans job-free (the /user screen-name " +
+      "collect is the one exception) and no request job lists a store") {
+    // wide enough that each serving store holds more bucket dirs than
+    // Spark's parallel-listing threshold (32): listing a whole store root
+    // would be a job with a task per dir
+    val n = 150
+    val wideTweets = tweets.union((0 until n).map(i =>
+      ((1000 + i).toString, (100 + i).toString, s"hiring engineers batch$i",
+        Seq(s"tag$i", "jobs"), f"2021-04-${1 + i % 28}%02dT10:00:00Z"))
+      .toDF("id", "userID", "tweetText", "tweetHashtags", "tweetDateTime"))
+    val wideUsers = users.union((0 until n).map(i =>
+      ((100 + i).toString, s"user$i", s"User $i")).toDF("id", "userScreenName", "userName"))
+    val bm25 = java.nio.file.Files.createTempDirectory("graft-http-jobs-bm25").toString
+    val tidx = java.nio.file.Files.createTempDirectory("graft-http-jobs-tidx").toString
+    BM25Index.build(wideTweets, "id", "tweetText", bm25)
+    HttpServing.buildTweetIndex(wideTweets, wideUsers, tidx)
+    Seq("hashtags", "by_user", "users").foreach { s =>
+      val dirs = java.nio.file.Files.list(java.nio.file.Paths.get(tidx, s))
+      val count = try dirs.iterator().asScala
+        .count(_.getFileName.toString.startsWith("__bucket=")) finally dirs.close()
+      assert(count > 32, s"$s holds only $count bucket dirs")
+    }
+    val frames = HttpServing.responseFrames(wideTweets, wideUsers,
+      Some(bm25), Some(tidx))
+    val routes = HttpServing.referenceRoutes(wideTweets, wideUsers,
+      bm25IndexDir = Some(bm25), tweetIndexDir = Some(tidx))
+    val requests = Seq(
+      HttpServing.QueryPath -> Map("query" -> "hiring engineers"),
+      HttpServing.HashtagPath -> Map("tag" -> "tag7"),
+      HttpServing.UserPath -> Map("id" -> "user7"))
+    // warm: the first request of a route may plan differently
+    requests.foreach { case (path, params) => routes(path)(params) }
+    for ((path, params) <- requests) {
+      val (frame, constructJobs) = jobs(frames(path)(params))
+      assert(frame.nonEmpty, s"$path built no response frame")
+      val expected = if (path == HttpServing.UserPath) 1 else 0
+      assert(constructJobs.size == expected,
+        s"$path ran ${constructJobs.size} jobs while building its plan " +
+          s"(tasks per job: $constructJobs); expected $expected")
+      val (body, requestJobs) = jobs(routes(path)(params))
+      assert(json(body, "$.status_code") == "200", body)
+      // a handful: far below a listing job's one task per bucket dir
+      assert(requestJobs.forall(_ <= 8),
+        s"$path ran a job with more than 8 tasks: $requestJobs")
+    }
+    StoreAdmin.truncate(bm25)
+    StoreAdmin.truncate(tidx)
   }
 }
